@@ -21,11 +21,17 @@ way.
 At scale: binary payloads ride Parquet as byte arrays; `mapInPandas`
 streams Arrow batches through Python once, and per-batch work is
 vectorized pandas — the pattern for real decode/resize/frame-sample jobs.
+
+Two seams carry the whole family. Every binary fixture table is one row
+of `FIXTURES` (artifact tag, version, binary column(s), per-doc encoder),
+written by `binary_fixture`; every row-at-a-time decode query runs its
+per-blob step through `decode_each`. The batch-vectorized queries
+(`_pcm_batch` / `_luma_batch` kernels) read the same fixtures.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -714,19 +720,17 @@ def mm_embed_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
     )
 
-    def embed(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def embed(did, payload):
         import hashlib
 
-        for pdf in batches:
-            embs = []
-            for payload in pdf["payload"]:
-                h = hashlib.md5(bytes(payload)).hexdigest()
-                embs.append(
-                    [(int(h[4 * i : 4 * i + 4], 16) % 1000) / 1000.0 for i in range(EMBED_DIM)]
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "embedding": embs})
+        h = hashlib.md5(payload).hexdigest()
+        yield {
+            "embedding": [
+                (int(h[4 * i : 4 * i + 4], 16) % 1000) / 1000.0 for i in range(EMBED_DIM)
+            ]
+        }
 
-    embedded = df.mapInPandas(embed, schema="doc_id long, embedding array<double>")
+    embedded = decode_each(df, ["payload"], "doc_id long, embedding array<double>", embed)
     return embedded.select(
         "doc_id",
         *[F.col("embedding")[i].alias(f"e{i}") for i in range(EMBED_DIM)],
@@ -753,50 +757,76 @@ def _fixture_shards(spark: SparkSession, sf_dir: str) -> int:
     return max(8, min(64, n // 1500))
 
 
-def _fixture_pixels(doc_id: int) -> tuple[int, int, bytes]:
-    import numpy as np
+def binary_fixture(spark: SparkSession, sf_dir: str, name: str) -> str:
+    """Write (once per corpus version) the binary fixture table `name` —
+    one row per document id holding the REAL payload(s) of FIXTURES[name]'s
+    per-doc encoder — through the committed-artifact protocol, and return
+    its path. The binary-column parquet layout is exactly how a multimodal
+    corpus ships image/audio/video payloads.
 
-    w = PNG_BASE + doc_id % PNG_W_MOD
-    h = PNG_BASE + doc_id % PNG_H_MOD
-    v = (doc_id * PNG_A + PNG_B * np.arange(w * h * 3, dtype=np.int64)) % 256
-    return w, h, v.astype(np.uint8).tobytes()
-
-
-def ensure_png_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once per corpus version) the PNG fixture table — one REAL
-    png binary per document id — through the committed-artifact protocol.
-    The binary-column parquet layout is exactly how a multimodal corpus
-    ships image payloads."""
+    Corpus-scaled shards (see _fixture_shards): the 30x probe caught an
+    unsharded fixture (1-2 files from the single-file documents scan)
+    pinning every decode to 1-2 tasks — decode parallelism must grow with
+    the corpus, which at 100 TB the scan provides for free."""
     from ..cache import ensure_artifact
     from ..catalog import table_path
 
+    tag, version, cols, encode = FIXTURES[name]
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            blobs = [encode(int(did)) for did in pdf["doc_id"]]
+            if len(cols) == 1:
+                blobs = [(b,) for b in blobs]
+            yield pd.DataFrame(
+                {"doc_id": pdf["doc_id"]}
+                | {c: [b[i] for b in blobs] for i, c in enumerate(cols)}
+            )
+
     def build(dest: str) -> None:
-        # corpus-scaled shards (see _fixture_shards): the 30x probe caught
-        # the unsharded fixture (1-2 files from the single-file documents
-        # scan) pinning every mm_image_* decode to 1-2 tasks — decode
-        # parallelism must grow with the corpus, which at 100 TB the scan
-        # provides for free
         ids = (
             load(spark, sf_dir, "documents")
             .select("doc_id")
             .repartition(_fixture_shards(spark, sf_dir))
         )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                pngs = []
-                for did in pdf["doc_id"]:
-                    w, h, px = _fixture_pixels(int(did))
-                    pngs.append(encode_png(w, h, 3, px))
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "png": pngs})
-
-        ids.mapInPandas(gen, schema="doc_id long, png binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
+        schema = ", ".join(["doc_id long"] + [f"{c} binary" for c in cols])
+        ids.mapInPandas(gen, schema=schema).write.mode("overwrite").parquet(dest)
 
     return ensure_artifact(
-        spark, sf_dir, "png_fixture", "v3", [table_path(sf_dir, "documents")], build
+        spark, sf_dir, tag, version, [table_path(sf_dir, "documents")], build
     )
+
+
+def decode_each(
+    src: DataFrame, cols: list[str], schema: str, fn: Callable[..., Iterator[dict]]
+) -> DataFrame:
+    """The per-blob step of every row-at-a-time decode query: Arrow-batched
+    mapInPandas over `src`, calling fn(doc_id, *blobs) once per row with
+    the `cols` payloads as bytes. fn yields row dicts — one per blob for a
+    stats query, one per frame or shot for an exploding one — and each row
+    is emitted under its doc_id; `schema` is the output schema, doc_id
+    first. Embarrassingly parallel, no shuffle: partitions scale with
+    input splits."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for did, *blobs in zip(pdf["doc_id"], *(pdf[c] for c in cols)):
+                rows.extend(
+                    {"doc_id": did} | r for r in fn(int(did), *map(bytes, blobs))
+                )
+            yield pd.DataFrame(rows)
+
+    return src.mapInPandas(run, schema=schema)
+
+
+def _png_fixture(doc_id: int) -> bytes:
+    import numpy as np
+
+    w = PNG_BASE + doc_id % PNG_W_MOD
+    h = PNG_BASE + doc_id % PNG_H_MOD
+    v = (doc_id * PNG_A + PNG_B * np.arange(w * h * 3, dtype=np.int64)) % 256
+    return encode_png(w, h, 3, v.astype(np.uint8).tobytes())
 
 
 @query(
@@ -835,31 +865,26 @@ def mm_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     one vectorized decode call, partitions scale with input splits."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_png_fixture(spark, sf_dir))
+    src = spark.read.parquet(binary_fixture(spark, sf_dir, "png"))
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, png in zip(pdf["doc_id"], pdf["png"]):
-                w, h, ch, px = decode_image(bytes(png))
-                arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "width": w,
-                        "height": h,
-                        "n_pixels": w * h,
-                        "sum_r": int(arr[0::ch].sum()),
-                        "sum_g": int(arr[1::ch].sum()),
-                        "sum_b": int(arr[2::ch].sum()),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def stats(did, png):
+        w, h, ch, px = decode_image(png)
+        arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+        yield {
+            "width": w,
+            "height": h,
+            "n_pixels": w * h,
+            "sum_r": int(arr[0::ch].sum()),
+            "sum_g": int(arr[1::ch].sum()),
+            "sum_b": int(arr[2::ch].sum()),
+        }
 
-    return src.mapInPandas(
-        stats,
-        schema="doc_id long, width int, height int, n_pixels long, "
+    return decode_each(
+        src,
+        ["png"],
+        "doc_id long, width int, height int, n_pixels long, "
         "sum_r long, sum_g long, sum_b long",
+        stats,
     )
 
 
@@ -872,44 +897,15 @@ BMP_H_BASE, BMP_H_MOD = 6, 7
 BMP_A, BMP_B = 17, 13  # pixel byte k of doc d: (d*BMP_A + k*BMP_B) % 256
 
 
-def ensure_bmp_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once per corpus version) the BMP fixture table — one REAL
-    24-bit BI_RGB bitmap per document, alternating bottom-up and
-    top-down row storage by doc parity so BOTH orientation paths run
-    under the registered query (decoded pixels are identical either
-    way — exactly what the closed-form oracle requires)."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
+def _bmp_fixture(doc_id: int) -> bytes:
+    # 24-bit BI_RGB, bottom-up / top-down row storage alternating by doc
+    # parity so BOTH orientation paths decode under the registered query
+    import numpy as np
 
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import numpy as np
-
-            for pdf in batches:
-                blobs = []
-                for did in pdf["doc_id"]:
-                    d = int(did)
-                    w = BMP_W_BASE + d % BMP_W_MOD
-                    h = BMP_H_BASE + d % BMP_H_MOD
-                    v = (d * BMP_A + BMP_B * np.arange(w * h * 3, dtype=np.int64)) % 256
-                    blobs.append(
-                        encode_bmp(w, h, v.astype(np.uint8).tobytes(), top_down=d % 2 == 1)
-                    )
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "bmp": blobs})
-
-        ids.mapInPandas(gen, schema="doc_id long, bmp binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark, sf_dir, "bmp_fixture", "v1", [table_path(sf_dir, "documents")], build
-    )
+    w = BMP_W_BASE + doc_id % BMP_W_MOD
+    h = BMP_H_BASE + doc_id % BMP_H_MOD
+    v = (doc_id * BMP_A + BMP_B * np.arange(w * h * 3, dtype=np.int64)) % 256
+    return encode_bmp(w, h, v.astype(np.uint8).tobytes(), top_down=doc_id % 2 == 1)
 
 
 @query(
@@ -961,34 +957,27 @@ def mm_decode_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
     splits at 100 TB."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_bmp_fixture(spark, sf_dir))
+    src = spark.read.parquet(binary_fixture(spark, sf_dir, "bmp"))
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, blob in zip(pdf["doc_id"], pdf["bmp"]):
-                w, h, ch, px = decode_image(bytes(blob))
-                arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                luma = arr.reshape(-1, 3).sum(axis=1) // 3
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "width": w,
-                        "height": h,
-                        "sum_r": int(arr[0::ch].sum()),
-                        "sum_g": int(arr[1::ch].sum()),
-                        "sum_b": int(arr[2::ch].sum()),
-                        "psum_luma": int(
-                            (np.arange(len(luma), dtype=np.int64) * luma).sum()
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def stats(did, blob):
+        w, h, ch, px = decode_image(blob)
+        arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+        luma = arr.reshape(-1, 3).sum(axis=1) // 3
+        yield {
+            "width": w,
+            "height": h,
+            "sum_r": int(arr[0::ch].sum()),
+            "sum_g": int(arr[1::ch].sum()),
+            "sum_b": int(arr[2::ch].sum()),
+            "psum_luma": int((np.arange(len(luma), dtype=np.int64) * luma).sum()),
+        }
 
-    return src.mapInPandas(
-        stats,
-        schema="doc_id long, width int, height int, "
+    return decode_each(
+        src,
+        ["bmp"],
+        "doc_id long, width int, height int, "
         "sum_r long, sum_g long, sum_b long, psum_luma long",
+        stats,
     )
 
 
@@ -1008,35 +997,50 @@ def _jpeg_fixture(doc_id: int) -> bytes:
     return encode_jpeg_blocks(bw, bh, values)
 
 
-def ensure_jpeg_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once per corpus version) the JPEG fixture table — one REAL
-    baseline JPEG per document id — via the committed-artifact protocol
-    (same contract as ensure_png_fixture)."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
+_JPEG_BLOCK_SCHEMA = "doc_id long, width int, height int, n_blocks int, sum_lum long, sum_sq long"
 
-    def build(dest: str) -> None:
-        # corpus-scaled shards so the downstream decode parallelizes like
-        # a real multi-split corpus (a 1-file fixture decoded on 1 task
-        # was the whole sf1 wall time)
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
 
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                jpgs = [_jpeg_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "jpg": jpgs})
+def _jpeg_block_stats(did: int, jpg: bytes):
+    """decode_each step shared by the constant-8x8-block JPEG queries:
+    dimensions, block count and exact luminance sums of the decoded image."""
+    import numpy as np
 
-        ids.mapInPandas(gen, schema="doc_id long, jpg binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
+    from .jpeg import decode_jpeg
 
-    return ensure_artifact(
-        spark, sf_dir, "jpeg_fixture", "v3", [table_path(sf_dir, "documents")], build
-    )
+    w, h, _ch, px = decode_jpeg(jpg)
+    arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+    yield {
+        "width": w,
+        "height": h,
+        "n_blocks": (w // 8) * (h // 8),
+        "sum_lum": int(arr.sum()),
+        "sum_sq": int((arr * arr).sum()),
+    }
+
+
+_JPEG_MCU_SCHEMA = (
+    "doc_id long, width int, height int, n_mcus int, sum_y long, sum_cb long, sum_cr long"
+)
+
+
+def _jpeg_mcu_stats(did: int, jpg: bytes):
+    """decode_each step shared by the 4:2:0 color JPEG queries: exact
+    Y/Cb/Cr sums over the UPSAMPLED component planes (components=True stops
+    before the float YCbCr->RGB matrix, which pytest pins instead)."""
+    import numpy as np
+
+    from .jpeg import decode_jpeg
+
+    w, h, _nc, planes = decode_jpeg(jpg, components=True)
+    sums = [int(p.astype(np.int64).sum()) for p in planes]
+    yield {
+        "width": w,
+        "height": h,
+        "n_mcus": (w // 16) * (h // 16),
+        "sum_y": sums[0],
+        "sum_cb": sums[1],
+        "sum_cr": sums[2],
+    }
 
 
 @query(
@@ -1078,33 +1082,8 @@ def mm_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned by the sparse-coefficient round-trip pytest. Same 100 TB
     shape as mm_decode_png: one vectorized decode per Arrow batch,
     fixed-size per-image outputs, partitions scale with input splits."""
-    import numpy as np
-
-    src = spark.read.parquet(ensure_jpeg_fixture(spark, sf_dir))
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, jpg in zip(pdf["doc_id"], pdf["jpg"]):
-                w, h, ch, px = decode_image(bytes(jpg))
-                arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "width": w,
-                        "height": h,
-                        "n_blocks": (w // 8) * (h // 8),
-                        "sum_lum": int(arr.sum()),
-                        "sum_sq": int((arr * arr).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        stats,
-        schema="doc_id long, width int, height int, n_blocks int, "
-        "sum_lum long, sum_sq long",
-    )
+    src = spark.read.parquet(binary_fixture(spark, sf_dir, "jpeg"))
+    return decode_each(src, ["jpg"], _JPEG_BLOCK_SCHEMA, _jpeg_block_stats)
 
 
 # 4:2:0 color-JPEG fixture constants — macroblock grid and per-channel
@@ -1124,35 +1103,6 @@ def _jpeg420_fixture(doc_id: int) -> bytes:
         for m in range(mw * mh)
     ]
     return encode_jpeg_color(mw, mh, trip, subsample="420")
-
-
-def ensure_jpeg420_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once per corpus version) the 4:2:0 color-JPEG fixture table
-    — one REAL chroma-subsampled baseline JPEG per document id — via the
-    committed-artifact protocol, corpus-scaled shards (same contract and
-    parallelism rationale as ensure_jpeg_fixture)."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
-
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                jpgs = [_jpeg420_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "jpg": jpgs})
-
-        ids.mapInPandas(gen, schema="doc_id long, jpg binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark, sf_dir, "jpeg420_fixture", "v1", [table_path(sf_dir, "documents")], build
-    )
 
 
 @query(
@@ -1199,36 +1149,8 @@ def mm_decode_jpeg_420(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash. Same 100 TB shape as mm_decode_jpeg: vectorized decode per
     Arrow batch, fixed-size outputs, partitions scale with input
     splits."""
-    import numpy as np
-
-    src = spark.read.parquet(ensure_jpeg420_fixture(spark, sf_dir))
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .jpeg import decode_jpeg
-
-        for pdf in batches:
-            rows = []
-            for did, jpg in zip(pdf["doc_id"], pdf["jpg"]):
-                w, h, nc, planes = decode_jpeg(bytes(jpg), components=True)
-                sums = [int(p.astype(np.int64).sum()) for p in planes]
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "width": w,
-                        "height": h,
-                        "n_mcus": (w // 16) * (h // 16),
-                        "sum_y": sums[0],
-                        "sum_cb": sums[1],
-                        "sum_cr": sums[2],
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        stats,
-        schema="doc_id long, width int, height int, n_mcus int, "
-        "sum_y long, sum_cb long, sum_cr long",
-    )
+    src = spark.read.parquet(binary_fixture(spark, sf_dir, "jpeg420"))
+    return decode_each(src, ["jpg"], _JPEG_MCU_SCHEMA, _jpeg_mcu_stats)
 
 
 # progressive 4:2:0 fixture constants (mm_decode_jpeg_progressive)
@@ -1247,34 +1169,6 @@ def _jpeg_progressive_fixture(doc_id: int) -> bytes:
         for m in range(mw * mh)
     ]
     return encode_jpeg_progressive_color(mw, mh, trip)
-
-
-def ensure_jpeg_progressive_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture table of REAL progressive (SOF2) 4:2:0 color
-    JPEGs, one per document id — corpus-scaled shards like every binary
-    fixture (test_fixture_artifacts_are_sharded enforces the floor)."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
-
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                jpgs = [_jpeg_progressive_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "jpg": jpgs})
-
-        ids.mapInPandas(gen, schema="doc_id long, jpg binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark, sf_dir, "jpeg_prog_fixture", "v1", [table_path(sf_dir, "documents")], build
-    )
 
 
 @query(
@@ -1322,36 +1216,8 @@ def mm_decode_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
     hook remains. 100 TB shape unchanged: one vectorized
     decode per Arrow batch, fixed-size outputs, partitions scale with
     input splits."""
-    import numpy as np
-
-    src = spark.read.parquet(ensure_jpeg_progressive_fixture(spark, sf_dir))
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .jpeg import decode_jpeg
-
-        for pdf in batches:
-            rows = []
-            for did, jpg in zip(pdf["doc_id"], pdf["jpg"]):
-                w, h, nc, planes = decode_jpeg(bytes(jpg), components=True)
-                sums = [int(p.astype(np.int64).sum()) for p in planes]
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "width": w,
-                        "height": h,
-                        "n_mcus": (w // 16) * (h // 16),
-                        "sum_y": sums[0],
-                        "sum_cb": sums[1],
-                        "sum_cr": sums[2],
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        stats,
-        schema="doc_id long, width int, height int, n_mcus int, "
-        "sum_y long, sum_cb long, sum_cr long",
-    )
+    src = spark.read.parquet(binary_fixture(spark, sf_dir, "jpeg_progressive"))
+    return decode_each(src, ["jpg"], _JPEG_MCU_SCHEMA, _jpeg_mcu_stats)
 
 
 # arithmetic-coded (SOF9) fixture constants (mm_decode_jpeg_arith)
@@ -1369,34 +1235,6 @@ def _jpeg_arith_fixture(doc_id: int) -> bytes:
     # restart interval cycles 0 (none) / 1 / 2 so the committed corpus
     # exercises the QM restart-resync path, not just unbroken segments
     return encode_jpeg_arith_blocks(bw, bh, values, restart_interval=doc_id % 3)
-
-
-def ensure_jpeg_arith_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture table of REAL arithmetic-coded (SOF9) JPEGs,
-    one per document id — corpus-scaled shards like every binary fixture
-    (test_fixture_artifacts_are_sharded enforces the floor)."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
-
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                jpgs = [_jpeg_arith_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "jpg": jpgs})
-
-        ids.mapInPandas(gen, schema="doc_id long, jpg binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark, sf_dir, "jpeg_arith_fixture", "v1", [table_path(sf_dir, "documents")], build
-    )
 
 
 @query(
@@ -1440,35 +1278,8 @@ def mm_decode_jpeg_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture cycles restart intervals 0/1/2 so committed streams cover
     QM resync too. 100 TB shape unchanged: one vectorized decode per
     Arrow batch, partitions scale with input splits."""
-    import numpy as np
-
-    src = spark.read.parquet(ensure_jpeg_arith_fixture(spark, sf_dir))
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .jpeg import decode_jpeg
-
-        for pdf in batches:
-            rows = []
-            for did, jpg in zip(pdf["doc_id"], pdf["jpg"]):
-                w, h, ch, px = decode_jpeg(bytes(jpg))
-                arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "width": w,
-                        "height": h,
-                        "n_blocks": (w // 8) * (h // 8),
-                        "sum_lum": int(arr.sum()),
-                        "sum_sq": int((arr * arr).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        stats,
-        schema="doc_id long, width int, height int, n_blocks int, "
-        "sum_lum long, sum_sq long",
-    )
+    src = spark.read.parquet(binary_fixture(spark, sf_dir, "jpeg_arith"))
+    return decode_each(src, ["jpg"], _JPEG_BLOCK_SCHEMA, _jpeg_block_stats)
 
 
 # arithmetic-PROGRESSIVE (SOF10) fixture constants (mm_decode_jpeg_arith_prog)
@@ -1486,40 +1297,6 @@ def _jpeg_arith_prog_fixture(doc_id: int) -> bytes:
     # restart interval cycles 0/1/2 — committed streams exercise the
     # per-scan QM resync path, same coverage discipline as the SOF9 twin
     return encode_jpeg_arith_progressive(bw, bh, values, restart_interval=doc_id % 3)
-
-
-def ensure_jpeg_arith_prog_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture table of REAL arithmetic-coded PROGRESSIVE
-    (SOF10) JPEGs — three QM-coded scans per stream (DC first at Al=1,
-    DC refinement, AC band EOB), one per document id; corpus-scaled
-    shards like every binary fixture."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
-
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                jpgs = [_jpeg_arith_prog_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "jpg": jpgs})
-
-        ids.mapInPandas(gen, schema="doc_id long, jpg binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark,
-        sf_dir,
-        "jpeg_arith_prog_fixture",
-        "v1",
-        [table_path(sf_dir, "documents")],
-        build,
-    )
 
 
 @query(
@@ -1564,35 +1341,8 @@ def mm_decode_jpeg_arith_prog(spark: SparkSession, sf_dir: str) -> DataFrame:
     documented lib-bound hooks — they need codec libraries the
     container lacks. 100 TB shape unchanged: one vectorized decode per
     Arrow batch, partitions scale with input splits."""
-    import numpy as np
-
-    src = spark.read.parquet(ensure_jpeg_arith_prog_fixture(spark, sf_dir))
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .jpeg import decode_jpeg
-
-        for pdf in batches:
-            rows = []
-            for did, jpg in zip(pdf["doc_id"], pdf["jpg"]):
-                w, h, ch, px = decode_jpeg(bytes(jpg))
-                arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "width": w,
-                        "height": h,
-                        "n_blocks": (w // 8) * (h // 8),
-                        "sum_lum": int(arr.sum()),
-                        "sum_sq": int((arr * arr).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        stats,
-        schema="doc_id long, width int, height int, n_blocks int, "
-        "sum_lum long, sum_sq long",
-    )
+    src = spark.read.parquet(binary_fixture(spark, sf_dir, "jpeg_arith_prog"))
+    return decode_each(src, ["jpg"], _JPEG_BLOCK_SCHEMA, _jpeg_block_stats)
 
 
 # lossless (SOF3) fixture constants (mm_decode_jpeg_lossless)
@@ -1616,36 +1366,27 @@ def _jpeg_lossless_fixture(doc_id: int) -> bytes:
     )
 
 
-def ensure_jpeg_lossless_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture table of REAL lossless (SOF3) JPEGs, one per
-    document id; corpus-scaled shards like every binary fixture."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
+_JPEG_LOSSLESS_SCHEMA = (
+    "doc_id long, width int, height int, predictor int, sum_lum long, sum_sq long"
+)
 
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
 
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                jpgs = [_jpeg_lossless_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "jpg": jpgs})
+def _jpeg_lossless_stats(did: int, jpg: bytes):
+    """decode_each step shared by the 8-bit lossless JPEG queries (the
+    fixtures sweep predictor 1 + doc_id % 7)."""
+    import numpy as np
 
-        ids.mapInPandas(gen, schema="doc_id long, jpg binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
+    from .jpeg import decode_jpeg
 
-    return ensure_artifact(
-        spark,
-        sf_dir,
-        "jpeg_lossless_fixture",
-        "v1",
-        [table_path(sf_dir, "documents")],
-        build,
-    )
+    w, h, _ch, px = decode_jpeg(jpg)
+    arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+    yield {
+        "width": w,
+        "height": h,
+        "predictor": 1 + did % 7,
+        "sum_lum": int(arr.sum()),
+        "sum_sq": int((arr * arr).sum()),
+    }
 
 
 @query(
@@ -1685,35 +1426,8 @@ def mm_decode_jpeg_lossless(spark: SparkSession, sf_dir: str) -> DataFrame:
     round 11 every T.81 frame type decodes. 100 TB shape
     unchanged: one vectorized decode per Arrow batch, partitions scale
     with input splits."""
-    import numpy as np
-
-    src = spark.read.parquet(ensure_jpeg_lossless_fixture(spark, sf_dir))
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .jpeg import decode_jpeg
-
-        for pdf in batches:
-            rows = []
-            for did, jpg in zip(pdf["doc_id"], pdf["jpg"]):
-                w, h, ch, px = decode_jpeg(bytes(jpg))
-                arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "width": w,
-                        "height": h,
-                        "predictor": 1 + int(did) % 7,
-                        "sum_lum": int(arr.sum()),
-                        "sum_sq": int((arr * arr).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        stats,
-        schema="doc_id long, width int, height int, predictor int, "
-        "sum_lum long, sum_sq long",
-    )
+    src = spark.read.parquet(binary_fixture(spark, sf_dir, "jpeg_lossless"))
+    return decode_each(src, ["jpg"], _JPEG_LOSSLESS_SCHEMA, _jpeg_lossless_stats)
 
 
 # hierarchical (DHP/EXP/SOF5) fixture constants (mm_decode_jpeg_hierarchical)
@@ -1734,39 +1448,6 @@ def _jpeg_hier_fixture(doc_id: int) -> bytes:
         for b in range(4 * bw * bh)
     ]
     return encode_jpeg_hierarchical(bw, bh, v0, res)
-
-
-def ensure_jpeg_hier_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture table of REAL hierarchical JPEG streams (DHP +
-    half-resolution SOF0 initial frame + EXP + SOF5 differential frame),
-    one per document id; corpus-scaled shards like every binary fixture."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
-
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                jpgs = [_jpeg_hier_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "jpg": jpgs})
-
-        ids.mapInPandas(gen, schema="doc_id long, jpg binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark,
-        sf_dir,
-        "jpeg_hier_fixture",
-        "v1",
-        [table_path(sf_dir, "documents")],
-        build,
-    )
 
 
 @query(
@@ -1808,35 +1489,8 @@ def mm_decode_jpeg_hierarchical(spark: SparkSession, sf_dir: str) -> DataFrame:
     mm_decode_jpeg_hier_kinds (round 11) extends this walk to ALL SIX
     differential frame types. 100 TB shape unchanged: one vectorized
     decode per Arrow batch, partitions scale with input splits."""
-    import numpy as np
-
-    src = spark.read.parquet(ensure_jpeg_hier_fixture(spark, sf_dir))
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .jpeg import decode_jpeg
-
-        for pdf in batches:
-            rows = []
-            for did, jpg in zip(pdf["doc_id"], pdf["jpg"]):
-                w, h, ch, px = decode_jpeg(bytes(jpg))
-                arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "width": w,
-                        "height": h,
-                        "n_blocks": (w // 8) * (h // 8),
-                        "sum_lum": int(arr.sum()),
-                        "sum_sq": int((arr * arr).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        stats,
-        schema="doc_id long, width int, height int, n_blocks int, "
-        "sum_lum long, sum_sq long",
-    )
+    src = spark.read.parquet(binary_fixture(spark, sf_dir, "jpeg_hier"))
+    return decode_each(src, ["jpg"], _JPEG_BLOCK_SCHEMA, _jpeg_block_stats)
 
 
 # lossless-arithmetic (SOF11) fixture constants (mm_decode_jpeg_lossless_arith)
@@ -1854,38 +1508,6 @@ def _jpeg_lossless_arith_fixture(doc_id: int) -> bytes:
     dri = (doc_id % 3) * w
     return encode_jpeg_lossless_arith(
         w, h, pix, predictor=1 + doc_id % 7, restart_interval=dri
-    )
-
-
-def ensure_jpeg_lossless_arith_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture table of REAL lossless-arithmetic (SOF11)
-    JPEGs, one per document id; corpus-scaled shards."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
-
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                jpgs = [_jpeg_lossless_arith_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "jpg": jpgs})
-
-        ids.mapInPandas(gen, schema="doc_id long, jpg binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark,
-        sf_dir,
-        "jpeg_lossless_arith_fixture",
-        "v1",
-        [table_path(sf_dir, "documents")],
-        build,
     )
 
 
@@ -1923,35 +1545,8 @@ def mm_decode_jpeg_lossless_arith(spark: SparkSession, sf_dir: str) -> DataFrame
     shifts a pixel sum and breaks the hash. 100 TB shape unchanged:
     one vectorized decode per Arrow batch, partitions scale with input
     splits."""
-    import numpy as np
-
-    src = spark.read.parquet(ensure_jpeg_lossless_arith_fixture(spark, sf_dir))
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .jpeg import decode_jpeg
-
-        for pdf in batches:
-            rows = []
-            for did, jpg in zip(pdf["doc_id"], pdf["jpg"]):
-                w, h, ch, px = decode_jpeg(bytes(jpg))
-                arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "width": w,
-                        "height": h,
-                        "predictor": 1 + int(did) % 7,
-                        "sum_lum": int(arr.sum()),
-                        "sum_sq": int((arr * arr).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        stats,
-        schema="doc_id long, width int, height int, predictor int, "
-        "sum_lum long, sum_sq long",
-    )
+    src = spark.read.parquet(binary_fixture(spark, sf_dir, "jpeg_lossless_arith"))
+    return decode_each(src, ["jpg"], _JPEG_LOSSLESS_SCHEMA, _jpeg_lossless_stats)
 
 
 # 12-bit lossless fixture constants (mm_decode_jpeg_lossless16)
@@ -1971,38 +1566,6 @@ def _jpeg_lossless16_fixture(doc_id: int) -> bytes:
     pix = [(doc_id * J16_A + J16_B * i) % 4096 for i in range(w * h)]
     enc = encode_jpeg_lossless if doc_id % 2 == 0 else encode_jpeg_lossless_arith
     return enc(w, h, pix, predictor=1 + doc_id % 7, precision=12)
-
-
-def ensure_jpeg_lossless16_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture table of 12-bit lossless JPEGs (Huffman/arith
-    alternating by doc parity); corpus-scaled shards."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
-
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                jpgs = [_jpeg_lossless16_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "jpg": jpgs})
-
-        ids.mapInPandas(gen, schema="doc_id long, jpg binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark,
-        sf_dir,
-        "jpeg_lossless16_fixture",
-        "v1",
-        [table_path(sf_dir, "documents")],
-        build,
-    )
 
 
 @query(
@@ -2038,32 +1601,27 @@ def mm_decode_jpeg_lossless16(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions scale with input splits."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_jpeg_lossless16_fixture(spark, sf_dir))
+    src = spark.read.parquet(binary_fixture(spark, sf_dir, "jpeg_lossless16"))
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def stats(did, jpg):
         from .jpeg import decode_jpeg
 
-        for pdf in batches:
-            rows = []
-            for did, jpg in zip(pdf["doc_id"], pdf["jpg"]):
-                w, h, ch, planes = decode_jpeg(bytes(jpg), components=True)
-                arr = planes[0].astype(np.int64)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "width": w,
-                        "height": h,
-                        "entropy": "huffman" if int(did) % 2 == 0 else "arith",
-                        "sum_lum": int(arr.sum()),
-                        "sum_sq": int((arr * arr).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows)
+        w, h, ch, planes = decode_jpeg(jpg, components=True)
+        arr = planes[0].astype(np.int64)
+        yield {
+            "width": w,
+            "height": h,
+            "entropy": "huffman" if did % 2 == 0 else "arith",
+            "sum_lum": int(arr.sum()),
+            "sum_sq": int((arr * arr).sum()),
+        }
 
-    return src.mapInPandas(
-        stats,
-        schema="doc_id long, width int, height int, entropy string, "
+    return decode_each(
+        src,
+        ["jpg"],
+        "doc_id long, width int, height int, entropy string, "
         "sum_lum long, sum_sq long",
+        stats,
     )
 
 
@@ -2095,38 +1653,6 @@ def _jpeg12_fixture(doc_id: int) -> bytes:
     if kind == 2:
         return encode_jpeg_arith_blocks(bw, bh, vals, restart_interval=dri, precision=12)
     return encode_jpeg_arith_progressive(bw, bh, vals, precision=12)
-
-
-def ensure_jpeg12_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture table of 12-bit DCT JPEGs (extended-sequential /
-    progressive alternating by doc parity); corpus-scaled shards."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
-
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                jpgs = [_jpeg12_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "jpg": jpgs})
-
-        ids.mapInPandas(gen, schema="doc_id long, jpg binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark,
-        sf_dir,
-        "jpeg12_fixture",
-        "v2",
-        [table_path(sf_dir, "documents")],
-        build,
-    )
 
 
 @query(
@@ -2170,33 +1696,28 @@ def mm_decode_jpeg12(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape: Arrow-batched mapInPandas, partitions scale with splits."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_jpeg12_fixture(spark, sf_dir))
+    src = spark.read.parquet(binary_fixture(spark, sf_dir, "jpeg12"))
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def stats(did, jpg):
         from .jpeg import decode_jpeg
 
-        for pdf in batches:
-            rows = []
-            for did, jpg in zip(pdf["doc_id"], pdf["jpg"]):
-                w, h, ch, planes = decode_jpeg(bytes(jpg), components=True)
-                assert planes[0].dtype == np.uint16, "12-bit plane must be uint16"
-                arr = planes[0].astype(np.int64)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "width": w,
-                        "height": h,
-                        "kind": ("seq", "prog", "aseq", "aprog")[int(did) % 4],
-                        "sum_lum": int(arr.sum()),
-                        "sum_sq": int((arr * arr).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows)
+        w, h, ch, planes = decode_jpeg(jpg, components=True)
+        assert planes[0].dtype == np.uint16, "12-bit plane must be uint16"
+        arr = planes[0].astype(np.int64)
+        yield {
+            "width": w,
+            "height": h,
+            "kind": ("seq", "prog", "aseq", "aprog")[did % 4],
+            "sum_lum": int(arr.sum()),
+            "sum_sq": int((arr * arr).sum()),
+        }
 
-    return src.mapInPandas(
-        stats,
-        schema="doc_id long, width int, height int, kind string, "
+    return decode_each(
+        src,
+        ["jpg"],
+        "doc_id long, width int, height int, kind string, "
         "sum_lum long, sum_sq long",
+        stats,
     )
 
 
@@ -2218,38 +1739,6 @@ def _jpeg_hier_kinds_fixture(doc_id: int) -> bytes:
     ]
     return encode_jpeg_hierarchical(
         bw, bh, v0, res, kind=JHK_KINDS[doc_id % 6]
-    )
-
-
-def ensure_jpeg_hier_kinds_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture table of hierarchical JPEG streams cycling ALL
-    SIX differential frame types by doc_id; corpus-scaled shards."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
-
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                jpgs = [_jpeg_hier_kinds_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "jpg": jpgs})
-
-        ids.mapInPandas(gen, schema="doc_id long, jpg binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark,
-        sf_dir,
-        "jpeg_hier_kinds_fixture",
-        "v1",
-        [table_path(sf_dir, "documents")],
-        build,
     )
 
 
@@ -2291,34 +1780,19 @@ def mm_decode_jpeg_hier_kinds(spark: SparkSession, sf_dir: str) -> DataFrame:
     mm_decode_jpeg_lossless_arith, decode_jpeg covers EVERY T.81 frame
     type at 8-bit precision. 100 TB shape unchanged: Arrow-batched
     mapInPandas decode, partitions scale with input splits."""
-    import numpy as np
+    src = spark.read.parquet(binary_fixture(spark, sf_dir, "jpeg_hier_kinds"))
 
-    src = spark.read.parquet(ensure_jpeg_hier_kinds_fixture(spark, sf_dir))
+    def stats(did, jpg):
+        for row in _jpeg_block_stats(did, jpg):
+            del row["n_blocks"]
+            yield {"kind": JHK_KINDS[did % 6]} | row
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .jpeg import decode_jpeg
-
-        for pdf in batches:
-            rows = []
-            for did, jpg in zip(pdf["doc_id"], pdf["jpg"]):
-                w, h, ch, px = decode_jpeg(bytes(jpg))
-                arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "kind": JHK_KINDS[int(did) % 6],
-                        "width": w,
-                        "height": h,
-                        "sum_lum": int(arr.sum()),
-                        "sum_sq": int((arr * arr).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        stats,
-        schema="doc_id long, kind string, width int, height int, "
+    return decode_each(
+        src,
+        ["jpg"],
+        "doc_id long, kind string, width int, height int, "
         "sum_lum long, sum_sq long",
+        stats,
     )
 
 
@@ -2614,6 +2088,7 @@ G11_A, G11_B = 29, 13
 
 
 def _g711_fixture(doc_id: int) -> tuple[bytes, bytes]:
+    # μ-law + A-law twin of the SAME companded byte stream
     import numpy as np
 
     n = G11_N_BASE + doc_id % G11_N_MOD
@@ -2623,40 +2098,6 @@ def _g711_fixture(doc_id: int) -> tuple[bytes, bytes]:
     return (
         encode_wav_g711(8000, 1, payload, 7),  # μ-law
         encode_wav_g711(8000, 1, payload, 6),  # A-law
-    )
-
-
-def ensure_g711_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture table of REAL G.711 WAV clips (μ-law + A-law
-    twin per document id, same companded byte stream) — corpus-scaled
-    shards like every binary fixture."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
-
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                pairs = [_g711_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "mu": [p[0] for p in pairs],
-                        "al": [p[1] for p in pairs],
-                    }
-                )
-
-        ids.mapInPandas(gen, schema="doc_id long, mu binary, al binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark, sf_dir, "g711_fixture", "v1", [table_path(sf_dir, "documents")], build
     )
 
 
@@ -2707,32 +2148,25 @@ def mm_audio_g711(spark: SparkSession, sf_dir: str) -> DataFrame:
     one vectorized gather per batch, no shuffle, fixed-size outputs."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_g711_fixture(spark, sf_dir))
+    src = spark.read.parquet(binary_fixture(spark, sf_dir, "g711"))
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, mu, al in zip(pdf["doc_id"], pdf["mu"], pdf["al"]):
-                _r, _c, smu = decode_audio_np(bytes(mu))
-                _r, _c, sal = decode_audio_np(bytes(al))
-                smu = smu.astype(np.int64)
-                sal = sal.astype(np.int64)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "n_samples": len(smu),
-                        "sum_mu": int(smu.sum()),
-                        "sum_abs_mu": int(np.abs(smu).sum()),
-                        "sum_al": int(sal.sum()),
-                        "sum_abs_al": int(np.abs(sal).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def stats(did, mu, al):
+        smu = decode_audio_np(mu)[2].astype(np.int64)
+        sal = decode_audio_np(al)[2].astype(np.int64)
+        yield {
+            "n_samples": len(smu),
+            "sum_mu": int(smu.sum()),
+            "sum_abs_mu": int(np.abs(smu).sum()),
+            "sum_al": int(sal.sum()),
+            "sum_abs_al": int(np.abs(sal).sum()),
+        }
 
-    return src.mapInPandas(
-        stats,
-        schema="doc_id long, n_samples long, sum_mu long, sum_abs_mu long, "
+    return decode_each(
+        src,
+        ["mu", "al"],
+        "doc_id long, n_samples long, sum_mu long, sum_abs_mu long, "
         "sum_al long, sum_abs_al long",
+        stats,
     )
 
 
@@ -2747,6 +2181,9 @@ ADPCM_NA, ADPCM_NB_, ADPCM_NC = 7, 5, 3  # nib(d,b,t) = (d*NA+NB*b+NC*t)%16
 
 
 def _adpcm_fixture(doc_id: int) -> bytes:
+    # format-17 WAV whose nibble stream, per-block seed predictor and step
+    # index are closed forms of (doc_id, block): the sequential decoder
+    # state machine is exactly replayable
     import struct
 
     import numpy as np
@@ -2761,39 +2198,6 @@ def _adpcm_fixture(doc_id: int) -> bytes:
         packed = (nibs[0::2] | (nibs[1::2] << 4)).astype(np.uint8).tobytes()
         blocks.append(struct.pack("<hBB", pred0, idx0, 0) + packed)
     return encode_wav_adpcm(8000, ADPCM_ALIGN, b"".join(blocks))
-
-
-def ensure_adpcm_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once per corpus version) the IMA-ADPCM fixture table — one
-    REAL format-17 WAV per document whose nibble stream, per-block seed
-    predictor, and step index are closed forms of (doc_id, block), so
-    the sequential decoder state machine is exactly replayable."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
-
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "wav": [_adpcm_fixture(int(d)) for d in pdf["doc_id"]],
-                    }
-                )
-
-        ids.mapInPandas(gen, schema="doc_id long, wav binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark, sf_dir, "adpcm_fixture", "v1", [table_path(sf_dir, "documents")], build
-    )
 
 
 _IMA_STEP_SQL = "[" + ",".join(str(s) for s in IMA_STEPS) + "]"
@@ -2866,7 +2270,7 @@ def mm_audio_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries; nothing shuffles."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_adpcm_fixture(spark, sf_dir))
+    src = spark.read.parquet(binary_fixture(spark, sf_dir, "adpcm"))
     spb = (ADPCM_ALIGN - 4) * 2 + 1
 
     def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -2937,46 +2341,13 @@ WAV_N_BASE, WAV_N_MOD = 400, 600
 WAV_RATES = 2000  # rate = 8000 + (d % 5) * WAV_RATES
 
 
-def _wav_fixture(doc_id: int) -> tuple[int, "list[int]"]:
+def _wav_fixture(doc_id: int) -> bytes:
     import numpy as np
 
     n = WAV_N_BASE + doc_id % WAV_N_MOD
     rate = 8000 + (doc_id % 5) * WAV_RATES
     s = (doc_id * WAV_A + WAV_B * np.arange(n, dtype=np.int64)) % 4001 - 2000
-    return rate, s.astype(np.int16)
-
-
-def ensure_wav_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once per corpus version) the WAV fixture table — one real
-    RIFF/PCM16 payload per document id — via the committed-artifact
-    protocol."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
-
-    def build(dest: str) -> None:
-        # corpus-scaled shards: decode parallelism must grow with the
-        # corpus (same 30x-probe finding as the PNG fixture)
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                wavs = []
-                for did in pdf["doc_id"]:
-                    rate, s = _wav_fixture(int(did))
-                    wavs.append(encode_wav(rate, 1, s))  # ndarray fast path
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "wav": wavs})
-
-        ids.mapInPandas(gen, schema="doc_id long, wav binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark, sf_dir, "wav_fixture", "v3", [table_path(sf_dir, "documents")], build
-    )
+    return encode_wav(rate, 1, s.astype(np.int16))  # ndarray fast path
 
 
 @query(
@@ -3011,7 +2382,7 @@ def mm_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     clip, one vectorized decode per Arrow batch."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_wav_fixture(spark, sf_dir))
+    src = spark.read.parquet(binary_fixture(spark, sf_dir, "wav"))
 
     def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -3087,7 +2458,7 @@ def mm_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     would swap the midpoint gather for a polyphase FIR, same plumbing."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_wav_fixture(spark, sf_dir))
+    src = spark.read.parquet(binary_fixture(spark, sf_dir, "wav"))
 
     def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -3155,33 +2526,6 @@ def _gif_fixture(doc_id: int) -> bytes:
     return encode_gif(w, h, idx, interlace=bool(doc_id % 2))
 
 
-def ensure_gif_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture table of REAL LZW-compressed GIFs, one per
-    document id — corpus-scaled shards like every binary fixture."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
-
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                gifs = [_gif_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "gif": gifs})
-
-        ids.mapInPandas(gen, schema="doc_id long, gif binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark, sf_dir, "gif_fixture", "v1", [table_path(sf_dir, "documents")], build
-    )
-
-
 @query(
     "mm_decode_gif",
     oracle=f"""
@@ -3221,32 +2565,27 @@ def mm_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     splits."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_gif_fixture(spark, sf_dir))
+    src = spark.read.parquet(binary_fixture(spark, sf_dir, "gif"))
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def stats(did, g):
         from .gif import decode_gif
 
-        for pdf in batches:
-            rows = []
-            for did, g in zip(pdf["doc_id"], pdf["gif"]):
-                w, h, _ch, idx = decode_gif(bytes(g), indices=True)
-                v = idx.astype(np.int64)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "width": w,
-                        "height": h,
-                        "sum_lum": int(v.sum()),
-                        "sum_sq": int((v * v).sum()),
-                        "n_colors": int(np.unique(v).size),
-                    }
-                )
-            yield pd.DataFrame(rows)
+        w, h, _ch, idx = decode_gif(g, indices=True)
+        v = idx.astype(np.int64)
+        yield {
+            "width": w,
+            "height": h,
+            "sum_lum": int(v.sum()),
+            "sum_sq": int((v * v).sum()),
+            "n_colors": int(np.unique(v).size),
+        }
 
-    return src.mapInPandas(
-        stats,
-        schema="doc_id long, width int, height int, "
+    return decode_each(
+        src,
+        ["gif"],
+        "doc_id long, width int, height int, "
         "sum_lum long, sum_sq long, n_colors int",
+        stats,
     )
 
 
@@ -3275,32 +2614,6 @@ def _gif_anim_fixture(doc_id: int) -> bytes:
         for f in range(nf)
     ]
     return encode_gif_animation(w, h, frames, delay_cs=GFA_DELAY)
-
-
-def ensure_gif_anim_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture table of REAL multi-frame (animated) GIFs."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
-
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                gifs = [_gif_anim_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "gif": gifs})
-
-        ids.mapInPandas(gen, schema="doc_id long, gif binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark, sf_dir, "gif_anim_fixture", "v1", [table_path(sf_dir, "documents")], build
-    )
 
 
 @query(
@@ -3342,31 +2655,26 @@ def mm_gif_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches; output is frames × O(1) stats, never pixels."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_gif_anim_fixture(spark, sf_dir))
+    src = spark.read.parquet(binary_fixture(spark, sf_dir, "gif_anim"))
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def stats(did, g):
         from .gif import decode_gif_frames
 
-        for pdf in batches:
-            rows = []
-            for did, g in zip(pdf["doc_id"], pdf["gif"]):
-                for f, (w, h, idx, delay) in enumerate(decode_gif_frames(bytes(g))):
-                    rows.append(
-                        {
-                            "doc_id": did,
-                            "frame": f,
-                            "width": w,
-                            "height": h,
-                            "delay_cs": delay,
-                            "sum_lum": int(idx.astype(np.int64).sum()),
-                        }
-                    )
-            yield pd.DataFrame(rows)
+        for f, (w, h, idx, delay) in enumerate(decode_gif_frames(g)):
+            yield {
+                "frame": f,
+                "width": w,
+                "height": h,
+                "delay_cs": delay,
+                "sum_lum": int(idx.astype(np.int64).sum()),
+            }
 
-    return src.mapInPandas(
-        stats,
-        schema="doc_id long, frame int, width int, height int, "
+    return decode_each(
+        src,
+        ["gif"],
+        "doc_id long, frame int, width int, height int, "
         "delay_cs int, sum_lum long",
+        stats,
     )
 
 
@@ -3389,34 +2697,6 @@ def _flac_fixture(doc_id: int) -> bytes:
     rate = 8000 + (doc_id % 4) * FLC_RATES
     s = (doc_id * FLC_A + FLC_B * np.arange(n, dtype=np.int64)) % 3847 - 1923
     return encode_flac(rate, s, blocksize=FLC_BLOCK)
-
-
-def ensure_flac_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture table of REAL FLAC streams (fixed-predictor
-    subframes, rice residuals, CRC-8/16, STREAMINFO MD5), one per
-    document id — corpus-scaled shards like every binary fixture."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
-
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                flacs = [_flac_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "flac": flacs})
-
-        ids.mapInPandas(gen, schema="doc_id long, flac binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark, sf_dir, "flac_fixture", "v1", [table_path(sf_dir, "documents")], build
-    )
 
 
 @query(
@@ -3462,34 +2742,28 @@ def mm_decode_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
     WAV path — the reason real audio corpora ship compressed."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_flac_fixture(spark, sf_dir))
+    src = spark.read.parquet(binary_fixture(spark, sf_dir, "flac"))
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def stats(did, fl):
         from .flac import decode_flac
 
-        for pdf in batches:
-            rows = []
-            for did, fl in zip(pdf["doc_id"], pdf["flac"]):
-                raw = bytes(fl)
-                rate, nch, bits, s = decode_flac(raw)
-                absamp = np.abs(s)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "sample_rate": rate,
-                        "n_samples": int(s.size),
-                        "n_frames": (s.size + FLC_BLOCK - 1) // FLC_BLOCK,
-                        "sum_amp": int(s.sum()),
-                        "sum_abs_amp": int(absamp.sum()),
-                        "peak_abs": int(absamp.max()) if s.size else 0,
-                    }
-                )
-            yield pd.DataFrame(rows)
+        rate, nch, bits, s = decode_flac(fl)
+        absamp = np.abs(s)
+        yield {
+            "sample_rate": rate,
+            "n_samples": int(s.size),
+            "n_frames": (s.size + FLC_BLOCK - 1) // FLC_BLOCK,
+            "sum_amp": int(s.sum()),
+            "sum_abs_amp": int(absamp.sum()),
+            "peak_abs": int(absamp.max()) if s.size else 0,
+        }
 
-    return src.mapInPandas(
-        stats,
-        schema="doc_id long, sample_rate int, n_samples long, n_frames int, "
+    return decode_each(
+        src,
+        ["flac"],
+        "doc_id long, sample_rate int, n_samples long, n_frames int, "
         "sum_amp long, sum_abs_amp long, peak_abs long",
+        stats,
     )
 
 
@@ -3647,8 +2921,7 @@ def mm_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas, one vectorized decode per batch, linear in images."""
     import numpy as np
 
-    fixture = ensure_png_fixture(spark, sf_dir)
-    pngs = spark.read.parquet(fixture)
+    pngs = spark.read.parquet(binary_fixture(spark, sf_dir, "png"))
 
     def ahash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -3794,7 +3067,7 @@ def mm_image_spectral_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode via _luma_batch, gather 64 samples per image, ONE batched
     8x8x8 einsum for the whole Arrow batch, no shuffle. All-integer
     output (driver-proof)."""
-    pngs = spark.read.parquet(ensure_png_fixture(spark, sf_dir))
+    pngs = spark.read.parquet(binary_fixture(spark, sf_dir, "png"))
 
     def phash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -3949,7 +3222,7 @@ def mm_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     executor, exactly how a 100 TB audio corpus wants it."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_wav_fixture(spark, sf_dir))
+    src = spark.read.parquet(binary_fixture(spark, sf_dir, "wav"))
 
     def frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -4028,7 +3301,7 @@ def mm_image_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_png_fixture(spark, sf_dir))
+    src = spark.read.parquet(binary_fixture(spark, sf_dir, "png"))
 
     def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -4116,7 +3389,7 @@ def mm_audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
     ragged tail frame breaks the hash. Integer-only output."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_wav_fixture(spark, sf_dir))
+    src = spark.read.parquet(binary_fixture(spark, sf_dir, "wav"))
 
     def vad(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -4228,7 +3501,7 @@ def mm_image_edge_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     the (R+G+B)//3 truncation flips some edge count."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_png_fixture(spark, sf_dir))
+    src = spark.read.parquet(binary_fixture(spark, sf_dir, "png"))
 
     def census(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -4311,7 +3584,7 @@ def mm_audio_zero_crossings(spark: SparkSession, sf_dir: str) -> DataFrame:
     parsing a byte of RIFF."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_wav_fixture(spark, sf_dir))
+    src = spark.read.parquet(binary_fixture(spark, sf_dir, "wav"))
 
     def census(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -4398,8 +3671,7 @@ def mm_image_resize_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
     thumbnail size by construction, invariant to input resolution."""
     import numpy as np
 
-    fixture = ensure_png_fixture(spark, sf_dir)
-    pngs = spark.read.parquet(fixture)
+    pngs = spark.read.parquet(binary_fixture(spark, sf_dir, "png"))
     G = RESIZE_GRID
 
     def pool(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -4519,7 +3791,7 @@ def mm_audio_spectral_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_image_phash_pairs — never all-pairs audio."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_wav_fixture(spark, sf_dir))
+    src = spark.read.parquet(binary_fixture(spark, sf_dir, "wav"))
     wht = np.array(
         [
             [(-1) ** bin(u & t).count("1") for t in range(AUDIO_WHT_FRAME)]
@@ -4600,60 +3872,29 @@ TIF_H_BASE, TIF_H_MOD = 5, 9
 TIF_A, TIF_B = 23, 19  # pixel byte k of doc d: (d*TIF_A + k*TIF_B) % 256
 
 
-def ensure_tiff_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once per corpus version) the TIFF fixture table — one REAL
-    strip-organized TIFF per document, sweeping compression
-    (LZW / uncompressed / PackBits, round 11) x horizontal-predictor x
-    little/big-endian by doc_id so every decoder path is value-checked
-    under the registered query."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
+def _tiff_fixture(doc_id: int) -> bytes:
+    # strip-organized TIFF sweeping compression (LZW / uncompressed /
+    # PackBits) x horizontal predictor x byte order by doc_id, so every
+    # decoder path is value-checked under the registered query
+    import numpy as np
 
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
+    from .tiff import encode_tiff
 
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import numpy as np
-
-            from .tiff import encode_tiff
-
-            for pdf in batches:
-                blobs = []
-                for did in pdf["doc_id"]:
-                    d = int(did)
-                    w = TIF_W_BASE + d % TIF_W_MOD
-                    h = TIF_H_BASE + d % TIF_H_MOD
-                    v = (d * TIF_A + TIF_B * np.arange(w * h * 3, dtype=np.int64)) % 256
-                    blobs.append(
-                        encode_tiff(
-                            w,
-                            h,
-                            v.astype(np.uint8).tobytes(),
-                            compression=(5, 1, 32773)[d % 3],
-                            predictor=2 if (d >> 1) % 2 == 0 else 1,
-                            big_endian=(d >> 2) % 2 == 1,
-                            rows_per_strip=3,
-                            # real EXIF sub-IFD (round 11): ISO SHORT +
-                            # pixel-dimension LONGs, ascending tag order
-                            exif=[
-                                (34855, 3, 100 + (d % 16) * 25),
-                                (40962, 4, w),
-                                (40963, 4, h),
-                            ],
-                        )
-                    )
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "tif": blobs})
-
-        ids.mapInPandas(gen, schema="doc_id long, tif binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark, sf_dir, "tiff_fixture", "v3", [table_path(sf_dir, "documents")], build
+    d = doc_id
+    w = TIF_W_BASE + d % TIF_W_MOD
+    h = TIF_H_BASE + d % TIF_H_MOD
+    v = (d * TIF_A + TIF_B * np.arange(w * h * 3, dtype=np.int64)) % 256
+    return encode_tiff(
+        w,
+        h,
+        v.astype(np.uint8).tobytes(),
+        compression=(5, 1, 32773)[d % 3],
+        predictor=2 if (d >> 1) % 2 == 0 else 1,
+        big_endian=(d >> 2) % 2 == 1,
+        rows_per_strip=3,
+        # real EXIF sub-IFD (round 11): ISO SHORT + pixel-dimension
+        # LONGs, ascending tag order
+        exif=[(34855, 3, 100 + (d % 16) * 25), (40962, 4, w), (40963, 4, h)],
     )
 
 
@@ -4698,33 +3939,26 @@ def mm_decode_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode query — partitions scale with input splits at 100 TB."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_tiff_fixture(spark, sf_dir))
+    src = spark.read.parquet(binary_fixture(spark, sf_dir, "tiff"))
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, blob in zip(pdf["doc_id"], pdf["tif"]):
-                w, h, ch, px = decode_image(bytes(blob))
-                arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "width": w,
-                        "height": h,
-                        "sum_r": int(arr[0::ch].sum()),
-                        "sum_g": int(arr[1::ch].sum()),
-                        "sum_b": int(arr[2::ch].sum()),
-                        "psum": int(
-                            (np.arange(len(arr), dtype=np.int64) * arr).sum()
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def stats(did, blob):
+        w, h, ch, px = decode_image(blob)
+        arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+        yield {
+            "width": w,
+            "height": h,
+            "sum_r": int(arr[0::ch].sum()),
+            "sum_g": int(arr[1::ch].sum()),
+            "sum_b": int(arr[2::ch].sum()),
+            "psum": int((np.arange(len(arr), dtype=np.int64) * arr).sum()),
+        }
 
-    return src.mapInPandas(
-        stats,
-        schema="doc_id long, width int, height int, "
+    return decode_each(
+        src,
+        ["tif"],
+        "doc_id long, width int, height int, "
         "sum_r long, sum_g long, sum_b long, psum long",
+        stats,
     )
 
 
@@ -4770,43 +4004,36 @@ def mm_exif_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     values against the main-IFD width/height (= 1 everywhere by
     construction, parsed independently from both IFDs). All cells
     BIGINT/STRING."""
-    src = spark.read.parquet(ensure_tiff_fixture(spark, sf_dir))
+    src = spark.read.parquet(binary_fixture(spark, sf_dir, "tiff"))
 
-    def meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def meta(did, blob):
         from .tiff import read_tiff_metadata
 
-        for pdf in batches:
-            rows = []
-            for did, blob in zip(pdf["doc_id"], pdf["tif"]):
-                m = read_tiff_metadata(bytes(blob))
-                t = m["tags"]
-                w, h = t[256][2], t[257][2]
-                ex = m["exif"]
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "byte_order": m["byte_order"],
-                        "n_ifd_entries": m["n_entries"],
-                        "width": w,
-                        "height": h,
-                        "compression": t[259][2],
-                        "predictor": t[317][2],
-                        "rows_per_strip": t[278][2],
-                        "n_strips": t[273][1],
-                        "exif_iso": ex[34855][2],
-                        "dims_consistent": int(
-                            ex[40962][2] == w and ex[40963][2] == h
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows)
+        m = read_tiff_metadata(blob)
+        t = m["tags"]
+        w, h = t[256][2], t[257][2]
+        ex = m["exif"]
+        yield {
+            "byte_order": m["byte_order"],
+            "n_ifd_entries": m["n_entries"],
+            "width": w,
+            "height": h,
+            "compression": t[259][2],
+            "predictor": t[317][2],
+            "rows_per_strip": t[278][2],
+            "n_strips": t[273][1],
+            "exif_iso": ex[34855][2],
+            "dims_consistent": int(ex[40962][2] == w and ex[40963][2] == h),
+        }
 
-    return src.mapInPandas(
-        meta,
-        schema="doc_id long, byte_order string, n_ifd_entries long, "
+    return decode_each(
+        src,
+        ["tif"],
+        "doc_id long, byte_order string, n_ifd_entries long, "
         "width long, height long, compression long, predictor long, "
         "rows_per_strip long, n_strips long, exif_iso long, "
         "dims_consistent long",
+        meta,
     ).orderBy("doc_id")
 
 
@@ -4864,7 +4091,7 @@ def mm_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     query."""
     import numpy as np
 
-    pngs = spark.read.parquet(ensure_png_fixture(spark, sf_dir))
+    pngs = spark.read.parquet(binary_fixture(spark, sf_dir, "png"))
 
     def dhash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -4944,7 +4171,7 @@ def mm_image_blur_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel decode-query contract as the rest of the mm_image family."""
     import numpy as np
 
-    pngs = spark.read.parquet(ensure_png_fixture(spark, sf_dir))
+    pngs = spark.read.parquet(binary_fixture(spark, sf_dir, "png"))
 
     def blur(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -4996,50 +4223,41 @@ GS_F_BASE, GS_F_MOD = 7, 5  # frames 7..11 (>= 2 cuts guaranteed)
 GS_THRESH = 8  # boundary iff mean abs pixel delta > GS_THRESH
 
 
-def ensure_gif_shots_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture of REAL animated GIFs with SHOT structure —
-    runs of GS_LEN identical frames separated by hard cuts (a constant
-    value shift), the ground truth a shot-boundary detector must
-    recover."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
+def _gif_shots_fixture(doc_id: int) -> bytes:
+    # animated GIF with SHOT structure — runs of GS_LEN identical frames
+    # split by hard cuts (a constant value shift), the ground truth a
+    # shot-boundary detector must recover
+    import numpy as np
 
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
+    from .gif import encode_gif_animation
 
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import numpy as np
+    d = doc_id
+    w = GS_W_BASE + d % GS_W_MOD
+    h = GS_H_BASE + d % GS_H_MOD
+    nf = GS_F_BASE + d % GS_F_MOD
+    frames = [
+        (
+            (d * GS_A + GS_B * np.arange(w * h, dtype=np.int64) + GS_C * (f // GS_LEN))
+            % 256
+        ).astype(np.uint8)
+        for f in range(nf)
+    ]
+    return encode_gif_animation(w, h, frames, delay_cs=4)
 
-            from .gif import encode_gif_animation
 
-            for pdf in batches:
-                gifs = []
-                for did in pdf["doc_id"]:
-                    d = int(did)
-                    w = GS_W_BASE + d % GS_W_MOD
-                    h = GS_H_BASE + d % GS_H_MOD
-                    nf = GS_F_BASE + d % GS_F_MOD
-                    frames = [
-                        (
-                            (d * GS_A + GS_B * np.arange(w * h, dtype=np.int64)
-                             + GS_C * (f // GS_LEN)) % 256
-                        ).astype(np.uint8)
-                        for f in range(nf)
-                    ]
-                    gifs.append(encode_gif_animation(w, h, frames, delay_cs=4))
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "gif": gifs})
+def _gif_shot_sad(gif: bytes):
+    """Decode a shot-fixture GIF: (frame count, int64 frame stack, per-cut
+    SAD vector, cut mask) — the shared front half of shot detection and
+    keyframe selection."""
+    import numpy as np
 
-        ids.mapInPandas(gen, schema="doc_id long, gif binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
+    from .gif import decode_gif_frames
 
-    return ensure_artifact(
-        spark, sf_dir, "gif_shots_fixture", "v1", [table_path(sf_dir, "documents")], build
-    )
+    frames = decode_gif_frames(gif)
+    w, h = frames[0][0], frames[0][1]
+    stack = np.stack([f[2].astype(np.int64).reshape(-1) for f in frames])
+    sad = np.abs(np.diff(stack, axis=0)).sum(axis=1)
+    return len(frames), stack, sad, sad > GS_THRESH * w * h
 
 
 @query(
@@ -5098,39 +4316,24 @@ def mm_video_shot_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode_gif_frames' slot."""
     import numpy as np
 
-    from .gif import decode_gif_frames
+    src = spark.read.parquet(binary_fixture(spark, sf_dir, "gif_shots"))
 
-    src = spark.read.parquet(ensure_gif_shots_fixture(spark, sf_dir))
+    def shots(did, blob):
+        n_frames, _stack, sad, cuts = _gif_shot_sad(blob)
+        yield {
+            "n_frames": n_frames,
+            "n_shots": 1 + int(cuts.sum()),
+            "total_sad": int(sad.sum()),
+            "max_sad": int(sad.max()),
+            "first_cut_frame": int(np.argmax(cuts)) + 1 if cuts.any() else None,
+        }
 
-    def shots(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, blob in zip(pdf["doc_id"], pdf["gif"]):
-                frames = decode_gif_frames(bytes(blob))
-                w, h = frames[0][0], frames[0][1]
-                stack = np.stack(
-                    [f[2].astype(np.int64).reshape(-1) for f in frames]
-                )
-                sad = np.abs(np.diff(stack, axis=0)).sum(axis=1)
-                cuts = sad > GS_THRESH * w * h
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "n_frames": len(frames),
-                        "n_shots": 1 + int(cuts.sum()),
-                        "total_sad": int(sad.sum()),
-                        "max_sad": int(sad.max()),
-                        "first_cut_frame": int(np.argmax(cuts)) + 1
-                        if cuts.any()
-                        else None,
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        shots,
-        schema="doc_id long, n_frames long, n_shots long, total_sad long, "
+    return decode_each(
+        src,
+        ["gif"],
+        "doc_id long, n_frames long, n_shots long, total_sad long, "
         "max_sad long, first_cut_frame long",
+        shots,
     )
 
 
@@ -5169,37 +4372,6 @@ def _png_variant_fixture(doc_id: int) -> bytes:
     )
     idx = bytes((d * PNV_IA + i * PNV_IB) % PNV_NPAL for i in range(w * h))
     return encode_png_ext(w, h, 1, idx, palette=pal, interlace=0 if v == 2 else 1)
-
-
-def ensure_png_variants_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture table of palette/Adam7 PNGs; corpus-scaled shards."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
-
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                pngs = [_png_variant_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "png": pngs})
-
-        ids.mapInPandas(gen, schema="doc_id long, png binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark,
-        sf_dir,
-        "png_variants_fixture",
-        "v1",
-        [table_path(sf_dir, "documents")],
-        build,
-    )
 
 
 @query(
@@ -5256,32 +4428,27 @@ def mm_decode_png_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape unchanged: Arrow-batched mapInPandas decode."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_png_variants_fixture(spark, sf_dir))
+    src = spark.read.parquet(binary_fixture(spark, sf_dir, "png_variants"))
     names = ("gray_adam7", "rgb_adam7", "palette", "palette_adam7")
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, png in zip(pdf["doc_id"], pdf["png"]):
-                w, h, ch, px = _decode_png(bytes(png))
-                arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "variant": names[int(did) % 4],
-                        "width": w,
-                        "height": h,
-                        "channels": ch,
-                        "sum_bytes": int(arr.sum()),
-                        "sum_sq": int((arr * arr).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def stats(did, png):
+        w, h, ch, px = _decode_png(png)
+        arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+        yield {
+            "variant": names[did % 4],
+            "width": w,
+            "height": h,
+            "channels": ch,
+            "sum_bytes": int(arr.sum()),
+            "sum_sq": int((arr * arr).sum()),
+        }
 
-    return src.mapInPandas(
-        stats,
-        schema="doc_id long, variant string, width int, height int, "
+    return decode_each(
+        src,
+        ["png"],
+        "doc_id long, variant string, width int, height int, "
         "channels int, sum_bytes long, sum_sq long",
+        stats,
     )
 
 
@@ -5323,37 +4490,6 @@ def _pcm_depth_fixture(doc_id: int) -> bytes:
     return encode_wav_pcm(3, 32, v.astype("<f4").tobytes())
 
 
-def ensure_pcm_depth_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture table of 24-bit / float32 WAV clips."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
-
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                wavs = [_pcm_depth_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "wav": wavs})
-
-        ids.mapInPandas(gen, schema="doc_id long, wav binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark,
-        sf_dir,
-        "pcm_depth_fixture",
-        "v1",
-        [table_path(sf_dir, "documents")],
-        build,
-    )
-
-
 @query(
     "mm_audio_pcm_depths",
     oracle=f"""
@@ -5386,34 +4522,28 @@ def mm_audio_pcm_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged: Arrow-batched mapInPandas decode."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_pcm_depth_fixture(spark, sf_dir))
+    src = spark.read.parquet(binary_fixture(spark, sf_dir, "pcm_depth"))
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, wav in zip(pdf["doc_id"], pdf["wav"]):
-                _r, _c, s = decode_audio_np(bytes(wav))
-                if int(did) % 2 == 0:
-                    a = s.astype(np.int64)
-                    fmt = "pcm24"
-                else:
-                    a = np.round(s.astype(np.float64) * 256.0).astype(np.int64)
-                    fmt = "float32"
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "fmt": fmt,
-                        "n_samples": int(len(a)),
-                        "sum_amp": int(a.sum()),
-                        "sum_sq": int((a * a).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def stats(did, wav):
+        _r, _c, s = decode_audio_np(wav)
+        if did % 2 == 0:
+            a = s.astype(np.int64)
+            fmt = "pcm24"
+        else:
+            a = np.round(s.astype(np.float64) * 256.0).astype(np.int64)
+            fmt = "float32"
+        yield {
+            "fmt": fmt,
+            "n_samples": int(len(a)),
+            "sum_amp": int(a.sum()),
+            "sum_sq": int((a * a).sum()),
+        }
 
-    return src.mapInPandas(
+    return decode_each(
+        src,
+        ["wav"],
+        "doc_id long, fmt string, n_samples long, sum_amp long, sum_sq long",
         stats,
-        schema="doc_id long, fmt string, n_samples long, sum_amp long, "
-        "sum_sq long",
     )
 
 
@@ -5447,37 +4577,6 @@ def _bmp_indexed_fixture(doc_id: int) -> bytes:
     )
     return encode_bmp_indexed(
         w, h, idx, pal, rle=(v == 2), top_down=(v == 1)
-    )
-
-
-def ensure_bmp_indexed_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture table of 8-bit palette / RLE8 BMPs."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
-
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                bmps = [_bmp_indexed_fixture(int(did)) for did in pdf["doc_id"]]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "bmp": bmps})
-
-        ids.mapInPandas(gen, schema="doc_id long, bmp binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark,
-        sf_dir,
-        "bmp_indexed_fixture",
-        "v1",
-        [table_path(sf_dir, "documents")],
-        build,
     )
 
 
@@ -5522,31 +4621,26 @@ def mm_decode_bmp_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape unchanged: Arrow-batched mapInPandas decode."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_bmp_indexed_fixture(spark, sf_dir))
+    src = spark.read.parquet(binary_fixture(spark, sf_dir, "bmp_indexed"))
     names = ("palette", "palette_topdown", "rle8")
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, bmp in zip(pdf["doc_id"], pdf["bmp"]):
-                w, h, ch, px = _decode_bmp(bytes(bmp))
-                arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "variant": names[int(did) % 3],
-                        "width": w,
-                        "height": h,
-                        "sum_bytes": int(arr.sum()),
-                        "sum_sq": int((arr * arr).sum()),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def stats(did, bmp):
+        w, h, ch, px = _decode_bmp(bmp)
+        arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+        yield {
+            "variant": names[did % 3],
+            "width": w,
+            "height": h,
+            "sum_bytes": int(arr.sum()),
+            "sum_sq": int((arr * arr).sum()),
+        }
 
-    return src.mapInPandas(
-        stats,
-        schema="doc_id long, variant string, width int, height int, "
+    return decode_each(
+        src,
+        ["bmp"],
+        "doc_id long, variant string, width int, height int, "
         "sum_bytes long, sum_sq long",
+        stats,
     )
 
 LB_S = 16  # letterbox canvas side
@@ -5603,7 +4697,7 @@ def mm_image_letterbox(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-size feature row per image."""
     import numpy as np
 
-    pngs = spark.read.parquet(ensure_png_fixture(spark, sf_dir))
+    pngs = spark.read.parquet(binary_fixture(spark, sf_dir, "png"))
     S = LB_S
 
     def letterbox(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -5719,42 +4813,27 @@ def mm_video_keyframes(spark: SparkSession, sf_dir: str) -> DataFrame:
     few per clip), nothing shuffles."""
     import numpy as np
 
-    from .gif import decode_gif_frames
+    src = spark.read.parquet(binary_fixture(spark, sf_dir, "gif_shots"))
 
-    src = spark.read.parquet(ensure_gif_shots_fixture(spark, sf_dir))
+    def keyframes(did, blob):
+        _n, stack, _sad, cuts = _gif_shot_sad(blob)
+        shot_of = np.concatenate(([0], np.cumsum(cuts.astype(np.int64))))
+        for s in range(int(shot_of[-1]) + 1):
+            members = np.nonzero(shot_of == s)[0]
+            kf = int(members[0])
+            yield {
+                "shot_id": s,
+                "key_frame": kf,
+                "shot_len": int(len(members)),
+                "key_luma_sum": int(stack[kf].sum()),
+            }
 
-    def keyframes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, blob in zip(pdf["doc_id"], pdf["gif"]):
-                frames = decode_gif_frames(bytes(blob))
-                w, h = frames[0][0], frames[0][1]
-                stack = np.stack(
-                    [f[2].astype(np.int64).reshape(-1) for f in frames]
-                )
-                sad = np.abs(np.diff(stack, axis=0)).sum(axis=1)
-                cuts = sad > GS_THRESH * w * h
-                shot_of = np.concatenate(
-                    ([0], np.cumsum(cuts.astype(np.int64)))
-                )
-                for s in range(int(shot_of[-1]) + 1):
-                    members = np.nonzero(shot_of == s)[0]
-                    kf = int(members[0])
-                    rows.append(
-                        {
-                            "doc_id": did,
-                            "shot_id": s,
-                            "key_frame": kf,
-                            "shot_len": int(len(members)),
-                            "key_luma_sum": int(stack[kf].sum()),
-                        }
-                    )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        keyframes,
-        schema="doc_id long, shot_id long, key_frame long, shot_len long, "
+    return decode_each(
+        src,
+        ["gif"],
+        "doc_id long, shot_id long, key_frame long, shot_len long, "
         "key_luma_sum long",
+        keyframes,
     )
 
 
@@ -5765,52 +4844,27 @@ AV_F_BASE, AV_F_MOD = 4, 4  # frames 4..7
 AV_A, AV_B, AV_C = 97, 31, 13  # block b of frame f: (d*A + f*B + b*C) % 256
 
 
-def ensure_avi_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture of REAL AVI/MJPEG videos — every frame a
-    genuine baseline JPEG muxed through the RIFF writer; corpus-scaled
-    shards."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
+def _avi_jpeg_frames(d: int) -> tuple[int, int, list[bytes]]:
+    """(width, height, frames) of doc d's MJPEG stream: every frame a
+    genuine baseline JPEG of constant blocks."""
+    from .jpeg import encode_jpeg_blocks
 
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
+    bw = AV_BW_BASE + d % AV_BW_MOD
+    bh = AV_BH_BASE + d % AV_BH_MOD
+    nf = AV_F_BASE + d % AV_F_MOD
+    frames = [
+        encode_jpeg_blocks(
+            bw, bh, [(d * AV_A + f * AV_B + b * AV_C) % 256 for b in range(bw * bh)]
         )
+        for f in range(nf)
+    ]
+    return bw * 8, bh * 8, frames
 
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from .avi import encode_avi_mjpeg
-            from .jpeg import encode_jpeg_blocks
 
-            for pdf in batches:
-                blobs = []
-                for did in pdf["doc_id"]:
-                    d = int(did)
-                    bw = AV_BW_BASE + d % AV_BW_MOD
-                    bh = AV_BH_BASE + d % AV_BH_MOD
-                    nf = AV_F_BASE + d % AV_F_MOD
-                    frames = [
-                        encode_jpeg_blocks(
-                            bw,
-                            bh,
-                            [
-                                (d * AV_A + f * AV_B + b * AV_C) % 256
-                                for b in range(bw * bh)
-                            ],
-                        )
-                        for f in range(nf)
-                    ]
-                    blobs.append(encode_avi_mjpeg(bw * 8, bh * 8, frames))
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "avi": blobs})
+def _avi_fixture(doc_id: int) -> bytes:
+    from .avi import encode_avi_mjpeg
 
-        ids.mapInPandas(gen, schema="doc_id long, avi binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark, sf_dir, "avi_fixture", "v1", [table_path(sf_dir, "documents")], build
-    )
+    return encode_avi_mjpeg(*_avi_jpeg_frames(doc_id))
 
 
 @query(
@@ -5857,46 +4911,39 @@ def mm_decode_avi_mjpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas, partitions scale with input splits at 100 TB."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_avi_fixture(spark, sf_dir))
+    src = spark.read.parquet(binary_fixture(spark, sf_dir, "avi"))
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def stats(did, blob):
         from .avi import decode_avi_mjpeg
         from .jpeg import decode_jpeg
 
-        for pdf in batches:
-            rows = []
-            for did, blob in zip(pdf["doc_id"], pdf["avi"]):
-                d = decode_avi_mjpeg(bytes(blob))
-                sums = []
-                dims_ok = True
-                for jf in d["frames"]:
-                    w, h, _n, planes = decode_jpeg(jf, components=True)
-                    dims_ok = dims_ok and (w, h) == (d["hdr_w"], d["hdr_h"])
-                    sums.append(int(planes[0].astype(np.int64).sum()))
-                consistent = int(
-                    d["hdr_n_frames"] == len(d["frames"]) == d["n_idx1"]
-                    and (d["hdr_w"], d["hdr_h"]) == (d["bmp_w"], d["bmp_h"])
-                    and dims_ok
-                )
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "width": d["hdr_w"],
-                        "height": d["hdr_h"],
-                        "n_frames": len(d["frames"]),
-                        "container_consistent": consistent,
-                        "sum_lum": sum(sums),
-                        "frame_weighted_lum": sum(
-                            (f + 1) * s for f, s in enumerate(sums)
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows)
+        d = decode_avi_mjpeg(blob)
+        sums = []
+        dims_ok = True
+        for jf in d["frames"]:
+            w, h, _n, planes = decode_jpeg(jf, components=True)
+            dims_ok = dims_ok and (w, h) == (d["hdr_w"], d["hdr_h"])
+            sums.append(int(planes[0].astype(np.int64).sum()))
+        consistent = int(
+            d["hdr_n_frames"] == len(d["frames"]) == d["n_idx1"]
+            and (d["hdr_w"], d["hdr_h"]) == (d["bmp_w"], d["bmp_h"])
+            and dims_ok
+        )
+        yield {
+            "width": d["hdr_w"],
+            "height": d["hdr_h"],
+            "n_frames": len(d["frames"]),
+            "container_consistent": consistent,
+            "sum_lum": sum(sums),
+            "frame_weighted_lum": sum((f + 1) * s for f, s in enumerate(sums)),
+        }
 
-    return src.mapInPandas(
-        stats,
-        schema="doc_id long, width long, height long, n_frames long, "
+    return decode_each(
+        src,
+        ["avi"],
+        "doc_id long, width long, height long, n_frames long, "
         "container_consistent long, sum_lum long, frame_weighted_lum long",
+        stats,
     ).orderBy("doc_id")
 
 
@@ -5907,69 +4954,23 @@ AV_SPF = 40
 AV_RATE = 8000
 
 
-def ensure_avi_av_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Committed fixture of interleaved A/V AVIs — MJPEG video plus a
-    mono PCM16 `auds` stream, chunks interleaved 00dc/01wb per frame."""
-    from ..cache import ensure_artifact
-    from ..catalog import table_path
+def _avi_av_fixture(doc_id: int) -> bytes:
+    # interleaved A/V: the MJPEG stream plus a mono PCM16 `auds` stream,
+    # chunks interleaved 00dc/01wb per frame
+    import numpy as np
 
-    def build(dest: str) -> None:
-        ids = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .repartition(_fixture_shards(spark, sf_dir))
-        )
+    from .avi import encode_avi_mjpeg
 
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import numpy as np
-
-            from .avi import encode_avi_mjpeg
-            from .jpeg import encode_jpeg_blocks
-
-            for pdf in batches:
-                blobs = []
-                for did in pdf["doc_id"]:
-                    d = int(did)
-                    bw = AV_BW_BASE + d % AV_BW_MOD
-                    bh = AV_BH_BASE + d % AV_BH_MOD
-                    nf = AV_F_BASE + d % AV_F_MOD
-                    frames = [
-                        encode_jpeg_blocks(
-                            bw,
-                            bh,
-                            [
-                                (d * AV_A + f * AV_B + b * AV_C) % 256
-                                for b in range(bw * bh)
-                            ],
-                        )
-                        for f in range(nf)
-                    ]
-                    pcm = [
-                        (
-                            (
-                                (d * AVA_A + f * AVA_B
-                                 + np.arange(AV_SPF, dtype=np.int64) * AVA_C)
-                                % 4096
-                            )
-                            - 2048
-                        ).astype("<i2").tobytes()
-                        for f in range(nf)
-                    ]
-                    blobs.append(
-                        encode_avi_mjpeg(
-                            bw * 8, bh * 8, frames,
-                            pcm_frames=pcm, sample_rate=AV_RATE,
-                        )
-                    )
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "avi": blobs})
-
-        ids.mapInPandas(gen, schema="doc_id long, avi binary").write.mode(
-            "overwrite"
-        ).parquet(dest)
-
-    return ensure_artifact(
-        spark, sf_dir, "avi_av_fixture", "v1", [table_path(sf_dir, "documents")], build
-    )
+    d = doc_id
+    w, h, frames = _avi_jpeg_frames(d)
+    pcm = [
+        (
+            (d * AVA_A + f * AVA_B + np.arange(AV_SPF, dtype=np.int64) * AVA_C) % 4096
+            - 2048
+        ).astype("<i2").tobytes()
+        for f in range(len(frames))
+    ]
+    return encode_avi_mjpeg(w, h, frames, pcm_frames=pcm, sample_rate=AV_RATE)
 
 
 @query(
@@ -6021,51 +5022,81 @@ def mm_decode_avi_interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc work bounded by the blob. Reference analogue: none."""
     import numpy as np
 
-    src = spark.read.parquet(ensure_avi_av_fixture(spark, sf_dir))
+    src = spark.read.parquet(binary_fixture(spark, sf_dir, "avi_av"))
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def stats(did, blob):
         from .avi import decode_avi_interleaved
         from .jpeg import decode_jpeg
 
-        for pdf in batches:
-            rows = []
-            for did, blob in zip(pdf["doc_id"], pdf["avi"]):
-                d = decode_avi_interleaved(bytes(blob))
-                nf = len(d["frames"])
-                vsum = 0
-                for jf in d["frames"]:
-                    _w, _h, _n, planes = decode_jpeg(jf, components=True)
-                    vsum += int(planes[0].astype(np.int64).sum())
-                a_abs = 0
-                a_fw = 0
-                for f, ab in enumerate(d["audio"]):
-                    arr = np.abs(
-                        np.frombuffer(ab, dtype="<i2").astype(np.int64)
-                    ).sum()
-                    a_abs += int(arr)
-                    a_fw += (f + 1) * int(arr)
-                ok = int(
-                    d["order"] == ["v", "a"] * nf
-                    and d["hdr_n_frames"] == nf == len(d["audio"])
-                    and d["n_idx1"] == 2 * nf
-                )
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "n_frames": nf,
-                        "n_audio_chunks": len(d["audio"]),
-                        "interleave_ok": ok,
-                        "audio_rate": d.get("audio_rate", 0),
-                        "sum_lum": vsum,
-                        "audio_sum_abs": a_abs,
-                        "audio_fweighted": a_fw,
-                    }
-                )
-            yield pd.DataFrame(rows)
+        d = decode_avi_interleaved(blob)
+        nf = len(d["frames"])
+        vsum = 0
+        for jf in d["frames"]:
+            _w, _h, _n, planes = decode_jpeg(jf, components=True)
+            vsum += int(planes[0].astype(np.int64).sum())
+        a_abs = 0
+        a_fw = 0
+        for f, ab in enumerate(d["audio"]):
+            arr = np.abs(np.frombuffer(ab, dtype="<i2").astype(np.int64)).sum()
+            a_abs += int(arr)
+            a_fw += (f + 1) * int(arr)
+        ok = int(
+            d["order"] == ["v", "a"] * nf
+            and d["hdr_n_frames"] == nf == len(d["audio"])
+            and d["n_idx1"] == 2 * nf
+        )
+        yield {
+            "n_frames": nf,
+            "n_audio_chunks": len(d["audio"]),
+            "interleave_ok": ok,
+            "audio_rate": d.get("audio_rate", 0),
+            "sum_lum": vsum,
+            "audio_sum_abs": a_abs,
+            "audio_fweighted": a_fw,
+        }
 
-    return src.mapInPandas(
-        stats,
-        schema="doc_id long, n_frames long, n_audio_chunks long, "
+    return decode_each(
+        src,
+        ["avi"],
+        "doc_id long, n_frames long, n_audio_chunks long, "
         "interleave_ok long, audio_rate long, sum_lum long, "
         "audio_sum_abs long, audio_fweighted long",
+        stats,
     ).orderBy("doc_id")
+
+
+# Every binary fixture table: name -> (artifact tag, builder version,
+# binary column(s), per-doc encoder). binary_fixture writes each one; a new
+# fixture is one row here plus its encoder. Tags and versions name the
+# committed artifacts on disk — change an encoder's output and its version
+# must be bumped, or the old artifact keeps serving.
+FIXTURES = {
+    "png": ("png_fixture", "v3", ("png",), _png_fixture),
+    "bmp": ("bmp_fixture", "v1", ("bmp",), _bmp_fixture),
+    "jpeg": ("jpeg_fixture", "v3", ("jpg",), _jpeg_fixture),
+    "jpeg420": ("jpeg420_fixture", "v1", ("jpg",), _jpeg420_fixture),
+    "jpeg_progressive": ("jpeg_prog_fixture", "v1", ("jpg",), _jpeg_progressive_fixture),
+    "jpeg_arith": ("jpeg_arith_fixture", "v1", ("jpg",), _jpeg_arith_fixture),
+    "jpeg_arith_prog": ("jpeg_arith_prog_fixture", "v1", ("jpg",), _jpeg_arith_prog_fixture),
+    "jpeg_lossless": ("jpeg_lossless_fixture", "v1", ("jpg",), _jpeg_lossless_fixture),
+    "jpeg_hier": ("jpeg_hier_fixture", "v1", ("jpg",), _jpeg_hier_fixture),
+    "jpeg_lossless_arith": (
+        "jpeg_lossless_arith_fixture", "v1", ("jpg",), _jpeg_lossless_arith_fixture
+    ),
+    "jpeg_lossless16": ("jpeg_lossless16_fixture", "v1", ("jpg",), _jpeg_lossless16_fixture),
+    "jpeg12": ("jpeg12_fixture", "v2", ("jpg",), _jpeg12_fixture),
+    "jpeg_hier_kinds": ("jpeg_hier_kinds_fixture", "v1", ("jpg",), _jpeg_hier_kinds_fixture),
+    "g711": ("g711_fixture", "v1", ("mu", "al"), _g711_fixture),
+    "adpcm": ("adpcm_fixture", "v1", ("wav",), _adpcm_fixture),
+    "wav": ("wav_fixture", "v3", ("wav",), _wav_fixture),
+    "gif": ("gif_fixture", "v1", ("gif",), _gif_fixture),
+    "gif_anim": ("gif_anim_fixture", "v1", ("gif",), _gif_anim_fixture),
+    "flac": ("flac_fixture", "v1", ("flac",), _flac_fixture),
+    "tiff": ("tiff_fixture", "v3", ("tif",), _tiff_fixture),
+    "gif_shots": ("gif_shots_fixture", "v1", ("gif",), _gif_shots_fixture),
+    "png_variants": ("png_variants_fixture", "v1", ("png",), _png_variant_fixture),
+    "pcm_depth": ("pcm_depth_fixture", "v1", ("wav",), _pcm_depth_fixture),
+    "bmp_indexed": ("bmp_indexed_fixture", "v1", ("bmp",), _bmp_indexed_fixture),
+    "avi": ("avi_fixture", "v1", ("avi",), _avi_fixture),
+    "avi_av": ("avi_av_fixture", "v1", ("avi",), _avi_av_fixture),
+}

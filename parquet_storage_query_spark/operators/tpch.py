@@ -41,6 +41,18 @@ def _ts(s: str):
     return F.to_timestamp(F.lit(s))
 
 
+# Line revenue sum(price * (1 - disc)) on q1's exact e4 integer lattice,
+# rounded half-up to cents by one integer rule, returned as cents / 100.
+# One SQL text serves the Spark builders (F.expr) and the DuckDB oracles
+# of q3/q10/q19: a DOUBLE sum rounded to 2 places splits the two engines
+# on half-cent ties (exact 541453.795 read .80 on Spark, .79 on DuckDB).
+_REV_E4 = (
+    "CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2))"
+    " * CAST(1 - l_discount AS DECIMAL(5,2)) * 10000 AS BIGINT)) AS BIGINT)"
+)
+EXACT_REVENUE_SQL = f"CAST({_REV_E4} + 50 - ({_REV_E4} + 50) % 100 AS DOUBLE) / 10000"
+
+
 # ---------------------------------------------------------------------------
 # Q2 shape: cheapest supplier per part (correlated min over a join)
 # ---------------------------------------------------------------------------
@@ -551,9 +563,9 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q10_returned_items",
-    oracle="""
+    oracle=f"""
     SELECT c_custkey, c_name,
-           round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+           {EXACT_REVENUE_SQL} AS revenue,
            round(c_acctbal, 2) AS c_acctbal, n_name
     FROM customer
     JOIN orders   ON c_custkey = o_custkey
@@ -572,8 +584,8 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     window. The returnflag filter reaches the lineitem scan (dictionary-
     encoded column → row-group pruning); date-filtered orders shuffle once
     with lineitem on orderkey, then once on custkey into customer⋈nation
-    (nation broadcast). Top-20 is TakeOrderedAndProject on the rounded
-    revenue with custkey tiebreak."""
+    (nation broadcast). Top-20 is TakeOrderedAndProject on the exact
+    half-up cent revenue (EXACT_REVENUE_SQL) with custkey tiebreak."""
     cust = load(spark, sf_dir, "customer")
     nation = load(spark, sf_dir, "nation")
     orders = load(spark, sf_dir, "orders").filter(
@@ -584,13 +596,13 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .groupBy("o_custkey")
-        .agg(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("_rev"))
+        .agg(F.expr(EXACT_REVENUE_SQL).alias("revenue"))
         .join(cust, F.col("o_custkey") == cust.c_custkey)
         .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
         .select(
             "c_custkey",
             "c_name",
-            F.round("_rev", 2).alias("revenue"),
+            "revenue",
             F.round("c_acctbal", 2).alias("c_acctbal"),
             "n_name",
         )
@@ -902,8 +914,8 @@ def q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q19_disjunctive_revenue",
-    oracle="""
-    SELECT round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+    oracle=f"""
+    SELECT {EXACT_REVENUE_SQL} AS revenue
     FROM lineitem JOIN part ON p_partkey = l_partkey
     WHERE (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 15
            AND l_quantity BETWEEN 1 AND 11)
@@ -943,7 +955,7 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(part, li.l_partkey == part.p_partkey)
         .filter(exact)
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
+        .agg(F.expr(EXACT_REVENUE_SQL).alias("revenue"))
     )
 
 

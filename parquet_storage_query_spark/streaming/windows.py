@@ -278,9 +278,9 @@ def _state_partitions(
       reducers are pure commit overhead at ANY corpus size.
     - `backlog_bytes`: for state that grows with the corpus (CDC live
       keys, dedup horizons), one partition per ~32 MB of backlog with a
-      floor of 8 (parallelism for small replays) and a cap of 4x the
-      session parallelism (bounds scheduling; a real deployment raises
-      the env override below instead).
+      floor of 8 (parallelism for small replays) under a cap of 4x the
+      session parallelism, applied last (bounds scheduling; a real
+      deployment raises the env override below instead).
     `SPARK_GRAFT_STREAM_STATE_PARTITIONS` overrides both for cluster
     deployments."""
     env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
@@ -290,7 +290,7 @@ def _state_partitions(
     if keys is not None:
         return max(1, min(default, -(-keys // 8)))
     if backlog_bytes is not None:
-        return max(8, min(4 * default, -(-backlog_bytes // (32 << 20))))
+        return min(4 * default, max(8, -(-backlog_bytes // (32 << 20))))
     return default
 
 

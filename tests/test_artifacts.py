@@ -199,44 +199,20 @@ def test_fixture_artifacts_are_sharded(spark):
     one-mapper trap). Every committed binary-fixture artifact must carry
     at least the 8-file floor of `_fixture_shards`, so a future builder
     edit that drops the repartition fails HERE instead of in a 10x bench.
-    A deliberately unsharded artifact is the red-path control."""
-    from parquet_storage_query_spark import cache
-    from parquet_storage_query_spark.operators.multimodal import (
-        ensure_adpcm_fixture,
-        ensure_bmp_fixture,
-        ensure_flac_fixture,
-        ensure_g711_fixture,
-        ensure_gif_anim_fixture,
-        ensure_gif_fixture,
-        ensure_gif_shots_fixture,
-        ensure_jpeg420_fixture,
-        ensure_jpeg_arith_fixture,
-        ensure_jpeg_fixture,
-        ensure_jpeg_progressive_fixture,
-        ensure_png_fixture,
-        ensure_tiff_fixture,
-        ensure_wav_fixture,
-    )
+    Every row of the FIXTURES table is checked, along with its schema:
+    doc_id long plus exactly the declared binary columns. A deliberately
+    unsharded artifact is the red-path control."""
+    import pyarrow.parquet as pq
 
-    for ensure in (
-        ensure_adpcm_fixture,
-        ensure_bmp_fixture,
-        ensure_png_fixture,
-        ensure_jpeg_fixture,
-        ensure_jpeg420_fixture,
-        ensure_jpeg_progressive_fixture,
-        ensure_jpeg_arith_fixture,
-        ensure_flac_fixture,
-        ensure_g711_fixture,
-        ensure_gif_anim_fixture,
-        ensure_gif_fixture,
-        ensure_gif_shots_fixture,
-        ensure_tiff_fixture,
-        ensure_wav_fixture,
-    ):
-        dest = ensure(spark, SF_SMOKE)
+    from parquet_storage_query_spark import cache
+    from parquet_storage_query_spark.operators.multimodal import FIXTURES, binary_fixture
+
+    for name, (_tag, _version, cols, _encode) in FIXTURES.items():
+        dest = binary_fixture(spark, SF_SMOKE, name)
         n = _data_file_count(dest)
-        assert n >= 8, f"{ensure.__name__}: only {n} data files (one-mapper trap)"
+        assert n >= 8, f"{name}: only {n} data files (one-mapper trap)"
+        got = [(f.name, str(f.type)) for f in pq.ParquetDataset(dest).schema]
+        assert got == [("doc_id", "int64")] + [(c, "binary") for c in cols], (name, got)
 
     # red-path control: an unsharded artifact must FAIL the predicate
     def build_unsharded(dest: str) -> None:

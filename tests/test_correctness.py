@@ -319,3 +319,47 @@ def test_recursive_ledger_restores_recursion_valve(spark):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prior)
+
+
+def test_exact_revenue_rounds_half_cent_ties_up(spark, tmp_path):
+    """q3/q10/q19 revenue is the exact e4-lattice sum rounded half-up to
+    cents, by the same integer rule on both engines. The corpus is one
+    qualifying order whose exact revenue is 604.045 while its DOUBLE sum
+    is not: round(DOUBLE sum, 2) split the engines on exactly this kind of
+    half-cent tie (Spark rounded up, DuckDB down)."""
+    import datetime as dt
+    from decimal import Decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    lines = [(541.10, 0.05), (100.00, 0.10)]
+    assert Decimal(sum(p * (1 - d) for p, d in lines)) != Decimal("604.045")
+    ts = dt.datetime.fromisoformat
+    rows = {
+        "nation": [(0, "ALGERIA", 0)],
+        "customer": [(1, "Customer#1", 0, 100.0, "BUILDING")],
+        "orders": [(10, 1, "F", 604.05, ts("1997-03-01"), "1-URGENT")],
+        "part": [(100, "part 100", "Brand#2", "STANDARD", 5, 1.0)],
+        "lineitem": [
+            (10, 100, 1, i + 1, 5.0, p, d, 0.0, "R", "F", ts("1998-02-01"))
+            for i, (p, d) in enumerate(lines)
+        ],
+    }
+    sf = str(tmp_path)
+    con = duckdb.connect()
+    for t, data in rows.items():
+        schema = pq.read_schema(table_path(SF_SMOKE, t)).remove_metadata()
+        table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in data], schema)
+        pq.write_table(table, table_path(sf, t))
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf, t)}')")
+    for name in ("q3_shipping_priority", "q10_returned_items", "q19_disjunctive_revenue"):
+        qd = _QUERIES[name]
+        sdf = qd.builder(spark, sf)
+        srows = [tuple(r) for r in sdf.collect()]
+        assert [r[sdf.columns.index("revenue")] for r in srows] == [604.05], (name, srows)
+        cur = con.execute(resolve_oracle(qd.oracle, sf))
+        ocols = [d[0] for d in cur.description]
+        assert result_fingerprint(sdf.columns, srows) == result_fingerprint(
+            ocols, cur.fetchall()
+        ), name

@@ -57,6 +57,23 @@ def test_state_partitions_sizing(spark, monkeypatch):
     assert _state_partitions(spark, backlog_bytes=big) == 3
 
 
+def test_state_partitions_cap_applies_after_floor(monkeypatch):
+    """The backlog floor of 8 must never lift the count above the cap of
+    4x session parallelism: at parallelism 1 the cap (4) wins. A stub
+    session stands in for Spark — only its conf is read."""
+
+    class _Session:
+        def __init__(self, parallelism: int):
+            self.conf = {"spark.sql.shuffle.partitions": str(parallelism)}
+
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raising=False)
+    big = 64 * (32 << 20)
+    for parallelism, small, large in ((1, 4, 4), (2, 8, 8), (4, 8, 16)):
+        session = _Session(parallelism)
+        assert _state_partitions(session, backlog_bytes=1 << 20) == small
+        assert _state_partitions(session, backlog_bytes=big) == large
+
+
 def test_run_to_memory_partitions_reach_query_and_conf_restored(spark, tmp_path):
     import json
 

@@ -7,6 +7,7 @@ Usage: python tools/profile_streaming.py <sf_dir> <query> [query ...]
 """
 from __future__ import annotations
 
+import argparse
 import json
 import sys
 import time
@@ -15,16 +16,22 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    ap = argparse.ArgumentParser(description="Profile streaming queries.")
+    ap.add_argument("sf_dir")
+    ap.add_argument("names", nargs="+", metavar="query")
+    ap.add_argument(
+        "--conf", action="append", default=[], metavar="k=v",
+        help="extra session conf, repeatable (e.g. RocksDB provider A/B)",
+    )
+    return ap.parse_intermixed_args(argv)
+
+
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--conf")]
-    confs = {}
-    argv = sys.argv[1:]
-    for i, a in enumerate(argv):
-        if a == "--conf" and i + 1 < len(argv):
-            k, _, v = argv[i + 1].partition("=")
-            confs[k] = v
-    sf_dir = args[0]
-    names = args[1:]
+    args = parse_args()
+    confs = dict(c.partition("=")[::2] for c in args.conf)
+    sf_dir = args.sf_dir
+    names = args.names
 
     import tempfile
     import os
